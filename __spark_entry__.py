@@ -2503,8 +2503,6 @@ def _neardup_label_index(spark: SparkSession, sf_dir: str):
     and the CC labeling — is identical; equality pinned in
     tests/test_cluster_index.py), hence the DuckDB oracles, which DO
     recompute from scratch, still hash-match."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.cluster_index import (
         FORMAT_VERSION,
         NearDupLabels,
@@ -2514,14 +2512,7 @@ def _neardup_label_index(spark: SparkSession, sf_dir: str):
     # so the stale-format index is simply never loaded (labels() would
     # refuse it) and a fresh one is built under the new tag. The corpus
     # fingerprint makes regenerated data at the same path a cache miss.
-    params = (
-        f"{os.path.abspath(sf_dir)}|t0.5|n3|v{FORMAT_VERSION}"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".labels_cache", tag
-    )
+    path = _artifact_cache_dir("labels", sf_dir, f"t0.5|n3|v{FORMAT_VERSION}")
     idx = NearDupLabels.load(spark, path)
     ver = idx.layout_version()
     if ver is None or ver < FORMAT_VERSION:
@@ -2847,18 +2838,9 @@ def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape stays pinned in pytest (tests/test_scale_ops.py,
     tests/test_plans.py) and raw lists remain on ``IvfIndex.query``.
     """
-    import hashlib
-
     cat = _cat(spark, sf_dir)
     emb = cat["embeddings"]
-    params = (
-        f"{os.path.abspath(sf_dir)}|nc16|it1"
-        f"|data{_corpus_fingerprint(sf_dir, 'embeddings')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".ivf_cache", tag
-    )
+    path = _artifact_cache_dir("ivf", sf_dir, "nc16|it1", "embeddings")
     idx = IvfIndex.load(spark, path)
     if not idx.exists():
         idx = IvfIndex.build(emb, path, num_centroids=16, kmeans_iters=1)
@@ -2921,19 +2903,12 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound 0.65 — above raw full-scan PQ's floor while touching
     ~nprobe/nc of the corpus (recall-vs-nprobe sweep committed in
     docs/BENCH_NOTES.md)."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.similarity import IvfIndex
 
     cat = _cat(spark, sf_dir)
     emb = cat["embeddings"]
-    params = (
-        f"{os.path.abspath(sf_dir)}|nc16|it1|m16|nb8|pqit6"
-        f"|data{_corpus_fingerprint(sf_dir, 'embeddings')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".ivfpq_cache", tag
+    path = _artifact_cache_dir(
+        "ivfpq", sf_dir, "nc16|it1|m16|nb8|pqit6", "embeddings"
     )
     idx = IvfIndex.load(spark, path)
     if not idx.exists():
@@ -3331,6 +3306,25 @@ def _corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
     return hashlib.md5(fp_str.encode()).hexdigest()[:12]
 
 
+def _artifact_cache_dir(
+    kind: str, sf_dir: str, params: str, table: str = "documents"
+) -> str:
+    """Repo-local ``.<kind>_cache/<tag>`` directory of a fit-once
+    artifact. The tag hashes ``<abs sf_dir>|<params>|data<fingerprint
+    of table>`` (see :func:`_corpus_fingerprint`), so a parameter or
+    layout change, or regenerated data at the same path, is a miss."""
+    import hashlib
+
+    key = (
+        f"{os.path.abspath(sf_dir)}|{params}"
+        f"|data{_corpus_fingerprint(sf_dir, table)}"
+    )
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), f".{kind}_cache", tag
+    )
+
+
 def _bpe_tok(spark: SparkSession, sf_dir: str):
     """Fit-once cached BpeTokenizer for the driver queries (the
     ``.ivf_cache`` idiom: keyed by sf_dir + params + a corpus data
@@ -3338,18 +3332,9 @@ def _bpe_tok(spark: SparkSession, sf_dir: str):
     repeated bench runs measure the merge-table read / tokenization,
     not training — training economics are measured separately in
     docs/BENCH_NOTES.md 'BPE trainer round economics')."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.bpe import BpeTokenizer
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|nm{BPE_NUM_MERGES}|mpc2"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bpe_cache", tag
-    )
+    path = _artifact_cache_dir("bpe", sf_dir, f"nm{BPE_NUM_MERGES}|mpc2")
     tok = BpeTokenizer(spark, path)
     if not tok.exists():
         cat = _cat(spark, sf_dir)
@@ -3406,22 +3391,13 @@ def q_quality_nb_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py) but exercising the artifact read path a
     streaming admitter uses, so the fit→persist→load→score loop is
     what gets hash-certified."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.functions.text import gopher_pass_col
     from dataeng_azure_spotify_spark.operators.quality_nb import (
         NbQualityModel,
     )
 
     cat = _cat(spark, sf_dir)
-    params = (
-        f"{os.path.abspath(sf_dir)}|b4096"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".nb_cache", tag
-    )
+    path = _artifact_cache_dir("nb", sf_dir, "b4096")
     model = NbQualityModel(spark, path)
     if not model.exists():
         model = NbQualityModel.fit(
@@ -3521,21 +3497,16 @@ def _unigram_tok(spark: SparkSession, sf_dir: str):
     repeated bench runs measure the piece-table read / tokenization,
     not training — training economics are measured separately in
     docs/BENCH_NOTES.md)."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.unigram import (
         UnigramTokenizer,
     )
 
     p = UNIGRAM_PARAMS
-    params = (
-        f"{os.path.abspath(sf_dir)}|t{p['n_iters']}|L{p['max_piece_len']}"
-        f"|mc{p['min_count']}|mp{p['max_pieces']}"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".unigram_cache", tag
+    path = _artifact_cache_dir(
+        "unigram",
+        sf_dir,
+        f"t{p['n_iters']}|L{p['max_piece_len']}"
+        f"|mc{p['min_count']}|mp{p['max_pieces']}",
     )
     tok = UnigramTokenizer(spark, path)
     if not tok.exists():
@@ -5343,21 +5314,12 @@ def _cdf_orders_table(spark: SparkSession, sf_dir: str):
     sf_dir + a corpus data fingerprint) so repeated bench runs measure
     the PULL (persisted-partial scan), not the table build; a partial
     or stale build is detected by history length and rebuilt."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.statefs import statefs_for
     from dataeng_azure_spotify_spark.streaming.gold import (
         ParquetSnapshotTable,
     )
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|cdf-v1"
-        f"|data{_corpus_fingerprint(sf_dir, 'orders')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".cdf_cache", tag
-    )
+    base = _artifact_cache_dir("cdf", sf_dir, "cdf-v1", "orders")
     t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
     if len(t.history()) != 2:
         statefs_for(base, spark).rmtree(base)
@@ -5425,21 +5387,12 @@ def _cdf_schema_table(spark: SparkSession, sf_dir: str):
     ``o_orderpriority AS priority`` — a column-add overwrite, which
     persists the r12 full-rewrite change partial
     (streaming/gold.py _write_schema_change_partial)."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.statefs import statefs_for
     from dataeng_azure_spotify_spark.streaming.gold import (
         ParquetSnapshotTable,
     )
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|cdfse-v1"
-        f"|data{_corpus_fingerprint(sf_dir, 'orders')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".cdf_cache", tag
-    )
+    base = _artifact_cache_dir("cdf", sf_dir, "cdfse-v1", "orders")
     t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
     if len(t.history()) != 3:
         statefs_for(base, spark).rmtree(base)
@@ -5525,21 +5478,12 @@ def _ivm_events_view(spark: SparkSession, sf_dir: str):
     — two insert runs splitting events by user parity, then a delete
     run retracting every user_id % 10 == 0 row — so the maintained
     view equals a from-scratch aggregate over the surviving rows."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.ivm import (
         MaterializedAggregate,
     )
     from dataeng_azure_spotify_spark.statefs import statefs_for
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|ivm-v1"
-        f"|data{_corpus_fingerprint(sf_dir, 'events')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    state = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".ivm_cache", tag
-    )
+    state = _artifact_cache_dir("ivm", sf_dir, "ivm-v1", "events")
     view = MaterializedAggregate(
         state, keys=["event_type"], sums={"value_sum": "value"}
     )

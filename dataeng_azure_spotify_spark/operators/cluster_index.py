@@ -82,6 +82,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compaction import (
+    RunPartitionedArtifact,
+    RunTable,
+    compact_run_tables,
+    is_compact_tag,
+    reject_compact_namespace,
+    retract_partitions,
+    validate_run_id,
+)
 from .dedup import _doc_shingle_hashes, _prefix_len, _verify_jaccard
 from .graph import connected_components
 
@@ -89,12 +98,19 @@ from .graph import connected_components
 BUILD_RUN = "build"
 
 #: on-disk artifact layout version. v2 (r7): prefix rows carry
-#: (n_sh, pos) for the PPJoin length/positional filters. ``append``
-#: and ``labels`` refuse an index written by ANY other layout version
-#: (see ``_check_version`` for the failure mode in each direction);
-#: ``build``/``init`` discard an existing artifact wholesale before
-#: writing, so an in-place rebuild is a clean upgrade path.
+#: (n_sh, pos) for the PPJoin length/positional filters; a v1 index
+#: would read them back NULL, every new-vs-old PPJoin condition would
+#: evaluate NULL and batch docs would silently become singletons.
+#: ``append`` and ``labels`` refuse an index written by ANY other
+#: layout version; ``build``/``init`` discard an existing artifact
+#: wholesale before writing, so an in-place rebuild is a clean upgrade
+#: path.
 FORMAT_VERSION = 2
+#: meta row schema, written last by ``build``/``init``
+META_SCHEMA = (
+    "threshold double, n int, num_buckets int, text_col string, "
+    "id_col string, format_version int"
+)
 
 #: fixed artifact schemas — reads are schema-explicit so an EMPTY index
 #: (``init`` + streaming appends from scratch) behaves identically to a
@@ -145,7 +161,7 @@ def _ppjoin_prune(an, ap, bn, bp, threshold: float):
     )
 
 
-class NearDupLabels:
+class NearDupLabels(RunPartitionedArtifact):
     """Persisted ``(doc_id, cluster_id)`` near-dup labeling with
     incremental append — build once, consume from every curation query.
     """
@@ -154,23 +170,14 @@ class NearDupLabels:
     PREFIX = "prefix"
     LABELS = "labels"
     RUNS = "runs"
-    META = "meta"
+    FORMAT_VERSION = FORMAT_VERSION
 
     def __init__(self, spark: SparkSession, path: str) -> None:
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            CompactionLog,
-        )
-
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self._shingles_path = os.path.join(path, self.SHINGLES)
         self._prefix_path = os.path.join(path, self.PREFIX)
         self._labels_path = os.path.join(path, self.LABELS)
         self._runs_path = os.path.join(path, self.RUNS)
-        self._meta_path = os.path.join(path, self.META)
-        self._clog = CompactionLog(spark, path)
-        self.fs = self._clog.fs  # StateFS (r11): shared per-path dispatch
-        self._meta: dict | None = None
 
     # -- construction ---------------------------------------------------
     @classmethod
@@ -239,11 +246,10 @@ class NearDupLabels:
             mode="overwrite",
         )
         idx._write_run_partitions(sh, prefix, BUILD_RUN)
-        idx.spark.createDataFrame(
-            [(threshold, n, num_buckets, text_col, id_col, FORMAT_VERSION)],
-            "threshold double, n int, num_buckets int, text_col string, "
-            "id_col string, format_version int",
-        ).coalesce(1).write.mode("overwrite").parquet(idx._meta_path)
+        idx._write_meta(
+            (threshold, n, num_buckets, text_col, id_col, FORMAT_VERSION),
+            META_SCHEMA,
+        )
         idx._mark_run(BUILD_RUN)
         return idx
 
@@ -269,95 +275,34 @@ class NearDupLabels:
         leak into the new index's appends)."""
         idx = cls(spark, path)
         idx._clear_artifact()
-        spark.createDataFrame(
-            [(threshold, n, num_buckets, text_col, id_col, FORMAT_VERSION)],
-            "threshold double, n int, num_buckets int, text_col string, "
-            "id_col string, format_version int",
-        ).coalesce(1).write.mode("overwrite").parquet(idx._meta_path)
+        idx._write_meta(
+            (threshold, n, num_buckets, text_col, id_col, FORMAT_VERSION),
+            META_SCHEMA,
+        )
         return idx
 
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "NearDupLabels":
-        return cls(spark, path)
-
-    def exists(self) -> bool:
-        return self.fs.exists(self._meta_path)
-
-    def layout_version(self) -> int | None:
-        """On-disk artifact format version; ``None`` when the index is
-        absent. Lets cache owners implement rebuild-on-older-layout
-        (``build()`` is the upgrade path for older versions; newer ones
-        must be left alone — see :meth:`_check_version`)."""
-        if not self.exists():
-            return None
-        return int(self.meta.get("format_version") or 1)
-
-    @property
-    def meta(self) -> dict:
-        if self._meta is None:
-            self._meta = self.spark.read.parquet(self._meta_path).first().asDict()
-        return self._meta
-
     def _clear_artifact(self) -> None:
-        """Remove every component dir of an existing index (meta first,
-        so a crash mid-clear or mid-rebuild reads as ABSENT, never as a
-        half-rebuilt index). Refuses to destroy an index written by
-        NEWER code — rebuilding is the documented upgrade path for
-        OLDER layouts only; for newer ones it would wipe data this
-        engine merely failed to read."""
-        if self.exists():
-            ver = int(self.meta.get("format_version") or 1)
-            if ver > FORMAT_VERSION:
-                raise ValueError(
-                    f"NearDupLabels at {self.path!r} has artifact format "
-                    f"v{ver}, newer than this code's v{FORMAT_VERSION} — "
-                    "refusing to rebuild over it; upgrade the engine"
-                )
-        for p in (self._meta_path, self._shingles_path, self._prefix_path,
-                  self._labels_path, self._runs_path, self._clog.path):
-            self.fs.rmtree(p)
-        self._meta = None
+        self._clear(
+            self._shingles_path,
+            self._prefix_path,
+            self._labels_path,
+            self._runs_path,
+        )
 
-    def _check_version(self) -> None:
-        """Refuse to touch an index whose on-disk layout this code does
-        not speak — in EITHER direction. Older (v1): prefix rows lack
-        n_sh/pos, so the v2 schema would NULL-fill them and every
-        new-vs-old PPJoin condition would evaluate NULL (batch docs
-        silently become singletons) — rebuild with :meth:`build` to
-        upgrade. Newer: written by later code; reading it under this
-        layout could silently misread changed columns — upgrade the
-        engine instead (do NOT rebuild, that would destroy the newer
-        index)."""
-        if not self.exists():
-            return  # empty/absent index: nothing on disk to misread
-        ver = int(self.meta.get("format_version") or 1)
-        if ver == FORMAT_VERSION:
-            return
-        direction = (
-            "rebuild the index with build() to upgrade it"
-            if ver < FORMAT_VERSION
-            else "upgrade this engine; rebuilding would destroy the newer index"
-        )
-        raise ValueError(
-            f"NearDupLabels at {self.path!r} has artifact format v{ver}; "
-            f"this code speaks v{FORMAT_VERSION} — {direction}"
-        )
+    def _run_tables(self) -> list[RunTable]:
+        return [
+            RunTable(
+                path,
+                ("run",),
+                lambda path=path, schema=schema: self._read_live(path, schema),
+            )
+            for path, schema in (
+                (self._shingles_path, SHINGLES_SCHEMA),
+                (self._prefix_path, PREFIX_SCHEMA),
+            )
+        ]
 
     # -- read surface ---------------------------------------------------
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        """Schema-explicit artifact read; a missing or file-less dir
-        (fresh ``init``, or a crashed first append) is zero rows, never a
-        schema-inference failure. Run-partitioned tables (shingles /
-        prefix) additionally drop rows folded by a committed
-        :meth:`compact` and rows under an uncommitted compaction tag,
-        so reads stay exact through every compaction crash window."""
-        if not self.fs.exists(path):
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(schema).parquet(path)
-        if path in (self._shingles_path, self._prefix_path):
-            df = df.filter(self._clog.live_run_filter("run"))
-        return df
-
     def labels(self) -> DataFrame:
         """(doc_id, cluster_id) for every admitted document. An index
         with no meta reads as EMPTY even if component dirs survive on
@@ -409,13 +354,7 @@ class NearDupLabels:
         deterministically against the pre-run state (the run's own
         shingle/prefix partitions are excluded from the old side).
         """
-        if run_id == BUILD_RUN:
-            raise ValueError(f"run_id {BUILD_RUN!r} is reserved for build()")
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            reject_compact_namespace,
-        )
-
-        reject_compact_namespace(run_id, "NearDupLabels.append")
+        self._validate_run_id(run_id, "NearDupLabels.append")
         self._check_version()
         meta = self.meta
         threshold = float(meta["threshold"])
@@ -636,13 +575,7 @@ class NearDupLabels:
         be re-admitted later under a NEW run_id (their artifact rows
         are gone, so the double-admit guard passes).
         """
-        if run_id == BUILD_RUN:
-            raise ValueError(f"run_id {BUILD_RUN!r} is reserved for build()")
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            reject_compact_namespace,
-        )
-
-        reject_compact_namespace(run_id, "NearDupLabels.remove")
+        self._validate_run_id(run_id, "NearDupLabels.remove")
         self._check_version()
         meta = self.meta
         threshold = float(meta["threshold"])
@@ -689,7 +622,7 @@ class NearDupLabels:
             # candidate edges among survivors, from the stored hash-order
             # prefix index (same recall-1.0 join as build/append)
             prefix = (
-                self._read_or_empty(self._prefix_path, PREFIX_SCHEMA)
+                self._read_live(self._prefix_path, PREFIX_SCHEMA)
                 .drop("run")
                 .join(surv_doc, "doc")
             )
@@ -710,7 +643,7 @@ class NearDupLabels:
                 .distinct()
             )
             sh = (
-                self._read_or_empty(self._shingles_path, SHINGLES_SCHEMA)
+                self._read_live(self._shingles_path, SHINGLES_SCHEMA)
                 .drop("run")
                 .join(surv_doc, "doc")
             )
@@ -762,39 +695,11 @@ class NearDupLabels:
             self._clean_emptied(all_affected - kept)
             touched_buckets = sorted(all_affected)
 
-        # -- phase 2: purge the docs' shingle/prefix rows (their run
-        # partitions rewrite in place; fully-emptied partitions removed)
+        # -- phase 2: purge the docs' shingle/prefix rows (touched run
+        # partitions rewrite in place; fully-emptied ones removed)
         rm_doc = rm.select(F.col("doc_id").alias("doc"))
-        for path, schema in (
-            (self._shingles_path, SHINGLES_SCHEMA),
-            (self._prefix_path, PREFIX_SCHEMA),
-        ):
-            tbl = self._read_or_empty(path, schema)
-            truns = [
-                r["run"]
-                for r in tbl.join(F.broadcast(rm_doc), "doc")
-                .select("run")
-                .distinct()
-                .collect()  # O(touched runs)
-            ]
-            if not truns:
-                continue
-            remaining = (
-                tbl.filter(F.col("run").isin(truns))
-                .join(F.broadcast(rm_doc), "doc", "left_anti")
-                .localCheckpoint(eager=True)  # reads the files it replaces
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run")
-                .parquet(path)
-            )
-            kept_runs = {
-                r["run"] for r in remaining.select("run").distinct().collect()
-            }
-            for r in set(truns) - kept_runs:
-                self.fs.rmtree(os.path.join(path, f"run={r}"))
+        for t in self._run_tables():
+            retract_partitions(t.path, t.read, t.parts, "doc", rm_doc)
 
         self._mark_run(run_id)
         return {
@@ -804,23 +709,7 @@ class NearDupLabels:
             "replay": False,
         }
 
-    # -- internals ------------------------------------------------------
     # -- maintenance ------------------------------------------------------
-    def live_run_count(self) -> int:
-        """Number of LIVE ``run=`` partition names on disk across the
-        shingle/prefix tables (distinct names minus committed-folded)
-        — the quantity the :func:`...operators.compaction.
-        maybe_autocompact` policy thresholds. StateFS listings only, no
-        Spark job."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            distinct_run_names,
-        )
-
-        names = distinct_run_names(
-            self._shingles_path, nested=False
-        ) | distinct_run_names(self._prefix_path, nested=False)
-        return len(names - self._clog.folded())
-
     def compact(self, tag: str) -> dict:
         """Fold every COMMITTED run's shingle/prefix partitions into ONE
         consolidated ``run=<tag>`` partition per table (``tag`` must
@@ -839,92 +728,26 @@ class NearDupLabels:
         therefore safe to run even with one crashed epoch pending.
         Protocol and crash windows: :mod:`..operators.compaction`.
         Single-writer, like every other maintenance method."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            count_run_partitions,
-            delete_folded_partitions,
-            is_compact_tag,
-            validate_compact_tag,
+        self._check_version()
+        committed_runs = set(self.runs())
+        return compact_run_tables(
+            self._clog,
+            tag,
+            "NearDupLabels.compact",
+            self._run_tables(),
+            lambda r: r in committed_runs or is_compact_tag(r),
         )
 
-        validate_compact_tag(tag, "NearDupLabels.compact")
-        self._check_version()
-        tables = (
-            (self._shingles_path, SHINGLES_SCHEMA),
-            (self._prefix_path, PREFIX_SCHEMA),
-        )
-        dirs_before = sum(
-            count_run_partitions(p, nested=False) for p, _ in tables
-        )
-        committed_c = self._clog.committed()
-        swept = sum(
-            delete_folded_partitions(
-                p, {r for fl in committed_c.values() for r in fl}, nested=False
-            )
-            for p, _ in tables
-        )
-        committed_runs = set(self.runs())
-        folded_any: set[str] = set()
-        in_flight: set[str] = set()
-        for path, schema in tables:
-            live = self._read_or_empty(path, schema).localCheckpoint(
-                eager=True
-            )
-            runs_now = {
-                str(r["run"])
-                for r in live.select("run").distinct().collect()  # O(runs)
-            }
-            # fold committed runs and previous compact tags; leave a
-            # crashed in-flight run (dir without a registry entry) alone
-            fold = {
-                r
-                for r in runs_now
-                if r != tag and (r in committed_runs or is_compact_tag(r))
-            }
-            in_flight |= runs_now - fold - {tag}
-            if fold:
-                (
-                    live.filter(F.col("run").isin(sorted(fold)))
-                    .drop("run")
-                    .withColumn("run", F.lit(tag))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("run")
-                    .parquet(path)
-                )
-            live.unpersist()
-            folded_any |= fold
-        if not folded_any:
-            return {
-                "tag": tag,
-                "folded_runs": [],
-                "skipped_in_flight": sorted(in_flight),
-                "swept_dirs": swept,
-                "partition_dirs_before": dirs_before,
-                "partition_dirs_after": sum(
-                    count_run_partitions(p, nested=False) for p, _ in tables
-                ),
-                "replay": tag in committed_c,
-            }
-        folded_all = set(folded_any)  # COMMIT (+ superseded tags' sets)
-        for t in folded_any:
-            folded_all |= set(committed_c.get(t, []))
-        self._clog.commit(tag, sorted(folded_all))
-        for p, _ in tables:
-            delete_folded_partitions(p, folded_all, nested=False)
-        for t in folded_any:
-            if t in committed_c:
-                self._clog.drop_marker(t)
-        return {
-            "tag": tag,
-            "folded_runs": sorted(folded_any),
-            "skipped_in_flight": sorted(in_flight),
-            "swept_dirs": swept,
-            "partition_dirs_before": dirs_before,
-            "partition_dirs_after": sum(
-                count_run_partitions(p, nested=False) for p, _ in tables
-            ),
-            "replay": False,
-        }
+    # -- internals ------------------------------------------------------
+    @staticmethod
+    def _validate_run_id(run_id: str, where: str) -> None:
+        """Run ids name partition directories (the shared charset
+        rule), stay out of the compact namespace, and ``build`` is
+        reserved for the initial build's partitions."""
+        validate_run_id(run_id, where)
+        reject_compact_namespace(run_id, where)
+        if run_id == BUILD_RUN:
+            raise ValueError(f"run_id {BUILD_RUN!r} is reserved for build()")
 
     def _old_side(self, path: str, run_id: str) -> DataFrame:
         """Stored run partitions EXCLUDING ``run_id`` — a crashed
@@ -934,7 +757,7 @@ class NearDupLabels:
             SHINGLES_SCHEMA if path == self._shingles_path else PREFIX_SCHEMA
         )
         return (
-            self._read_or_empty(path, schema)
+            self._read_live(path, schema)
             .filter(F.col("run") != run_id)
             .drop("run")
         )

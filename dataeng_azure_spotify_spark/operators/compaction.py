@@ -1,4 +1,5 @@
-"""Crash-safe run-partition compaction for the persisted artifacts.
+"""Crash-safe run-partition compaction and retraction for the
+persisted artifacts.
 
 Every admitting artifact (NearDupLabels, SemanticDedupIndex,
 SubstringDupIndex; IvfIndex appends files rather than partitions)
@@ -10,13 +11,23 @@ committed run partitions into ONE consolidated ``run=<tag>`` partition
 per bucket while preserving the artifacts' exactly-once replay and
 retraction semantics.
 
-Commit protocol (shared by the three run-partitioned artifacts; each
-step idempotent, so a crashed ``compact`` retried with the SAME tag
-converges from any intermediate state):
+This module owns the protocol: :func:`compact_run_tables` is its one
+implementation, :func:`retract_partitions` is the one touched-partition
+retraction (IvfIndex uses it too), and :class:`RunPartitionedArtifact`
+holds the meta/layout-version/live-run-count surface. Each artifact
+supplies only what differs: its :class:`RunTable` paths and partition
+columns, its id column, which runs may fold, and which registry rows
+to freeze.
 
-1. (artifact-specific) write the per-run admitted-id REGISTRY for the
-   folded runs — the information replay needs once the row-level run
-   attribution is gone. Idempotent dynamic overwrite keyed by run.
+Commit protocol (each step idempotent, so a crashed ``compact``
+retried with the SAME tag converges from any intermediate state):
+
+0. sweep: delete the ``run=`` directories of runs a committed marker
+   already folded (a crash between steps 3 and 4 leaves them behind).
+1. (artifacts with a registry) write the per-run admitted-id REGISTRY
+   for the folded runs — the information replay needs once the
+   row-level run attribution is gone. Idempotent dynamic overwrite
+   keyed by run.
 2. write the consolidated rows under ``run=<tag>`` (dynamic overwrite
    of exactly the tag's partitions). Readers IGNORE rows under an
    uncommitted compact tag, so a crash here leaves every read exact.
@@ -33,6 +44,14 @@ through :meth:`CompactionLog.live_run_filter`, which keeps a row iff
 its run is (a) not folded by any committed compaction and (b) not an
 UNCOMMITTED compact tag. Both double-reads (crash between 3 and 4)
 and phantom reads (crash between 2 and 3) are thereby impossible.
+
+Retraction (:func:`retract_partitions`): one scan finds the partitions
+holding the ids; fully emptied partitions are deleted FIRST (dynamic
+overwrite never touches a partition absent from the written data),
+then the survivors of the partially touched ones are materialized —
+the rewrite reads the very files it replaces — and dynamic-overwrite
+them. A retry from any intermediate crash state sees only the ids
+still present and redoes exactly the remaining work.
 
 Replay of a folded run: the artifact's ``admit``/``append`` consults
 :meth:`CompactionLog.folded_originals` first and answers from the
@@ -54,8 +73,10 @@ from __future__ import annotations
 
 import os
 import re
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.statefs import statefs_for
@@ -73,17 +94,28 @@ def is_compact_tag(run: str) -> bool:
     return str(run).startswith(COMPACT_PREFIX)
 
 
+def validate_run_id(run_id: str, where: str) -> None:
+    """Run ids and compact tags name partition DIRECTORIES; restrict
+    them to characters Spark never escapes, so every literal-path
+    construction (emptied-partition deletes, folded-dir reclaim,
+    live-run listings) finds the directory it targets."""
+    if not re.fullmatch(r"[A-Za-z0-9._-]+", run_id or ""):
+        raise ValueError(
+            f"{where}: run_id must be non-empty [A-Za-z0-9._-]+ (it "
+            f"names a partition directory); got {run_id!r}"
+        )
+
+
 def validate_compact_tag(tag: str, where: str) -> None:
     """Tags name partition directories (the run_id charset rule) and
     must live in the reserved namespace so admission validators can
     keep live runs out of it."""
-    if not re.fullmatch(r"[A-Za-z0-9._-]+", tag or "") or not is_compact_tag(
-        tag
-    ):
+    validate_run_id(tag, where)
+    if not is_compact_tag(tag):
         raise ValueError(
-            f"{where}: compaction tag must be [A-Za-z0-9._-]+ and start "
-            f"with {COMPACT_PREFIX!r} (it names a partition directory "
-            f"and must never collide with a live run_id); got {tag!r}"
+            f"{where}: compaction tag must start with {COMPACT_PREFIX!r} "
+            "(it must never collide with a live run_id); got "
+            f"{tag!r}"
         )
 
 
@@ -193,17 +225,14 @@ class CompactionLog:
         self.fs.rmtree(os.path.join(self.path, tag))
 
 
-def delete_folded_partitions(
-    table_path: str, folded: set[str], nested: bool
-) -> int:
-    """Step 4: remove the folded ``run=`` directories. ``nested`` means
-    the run level sits under a first-level partition
+def _run_dirs(table_path: str, nested: bool) -> list[tuple[str, str]]:
+    """(parent dir, run name) of every ``run=`` directory on disk.
+    ``nested`` means the run level sits under a first-level partition
     (``bucket=*/run=*`` / ``cid=*/run=*``); otherwise ``run=*`` is
-    top-level. Idempotent; returns directories removed."""
+    top-level. StateFS listings only, no Spark job."""
     fs = statefs_for(table_path)
-    if not fs.isdir(table_path) or not folded:
-        return 0
-    removed = 0
+    if not fs.isdir(table_path):
+        return []
     parents = (
         [
             os.path.join(table_path, d)
@@ -213,59 +242,199 @@ def delete_folded_partitions(
         if nested
         else [table_path]
     )
-    for parent in parents:
-        for r in folded:
-            d = os.path.join(parent, f"run={r}")
-            if fs.isdir(d):
-                fs.rmtree(d)
-                removed += 1
-    return removed
+    return [
+        (parent, d[len("run="):])
+        for parent in parents
+        for d in fs.listdir(parent)
+        if d.startswith("run=") and fs.isdir(os.path.join(parent, d))
+    ]
+
+
+def delete_folded_partitions(
+    table_path: str, folded: set[str], nested: bool
+) -> int:
+    """Step 4: remove the folded ``run=`` directories. Idempotent;
+    returns directories removed."""
+    fs = statefs_for(table_path)
+    doomed = [
+        os.path.join(parent, f"run={r}")
+        for parent, r in _run_dirs(table_path, nested)
+        if r in folded
+    ]
+    for d in doomed:
+        fs.rmtree(d)
+    return len(doomed)
 
 
 def count_run_partitions(table_path: str, nested: bool) -> int:
     """Observability for the before/after table: number of ``run=``
     directories currently on disk."""
-    fs = statefs_for(table_path)
-    if not fs.isdir(table_path):
-        return 0
-    parents = (
-        [
-            os.path.join(table_path, d)
-            for d in fs.listdir(table_path)
-            if "=" in d and fs.isdir(os.path.join(table_path, d))
-        ]
-        if nested
-        else [table_path]
-    )
-    return sum(
-        1
-        for parent in parents
-        for d in fs.listdir(parent)
-        if d.startswith("run=") and fs.isdir(os.path.join(parent, d))
-    )
+    return len(_run_dirs(table_path, nested))
 
 
 def distinct_run_names(table_path: str, nested: bool) -> set[str]:
     """Distinct ``run=<name>`` partition names currently on disk (one
     listing pass; names, not per-bucket dir counts)."""
-    fs = statefs_for(table_path)
-    if not fs.isdir(table_path):
-        return set()
-    parents = (
-        [
-            os.path.join(table_path, d)
-            for d in fs.listdir(table_path)
-            if "=" in d and fs.isdir(os.path.join(table_path, d))
-        ]
-        if nested
-        else [table_path]
+    return {r for _, r in _run_dirs(table_path, nested)}
+
+
+def _overwrite_partitions(df: DataFrame, parts, path: str) -> None:
+    """Dynamic partition overwrite: replaces exactly the partitions
+    present in ``df``, never the others."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*parts)
+        .parquet(path)
     )
+
+
+@dataclass(frozen=True)
+class RunTable:
+    """One run-partitioned table of an artifact: its path, its
+    partition columns (``run`` last), and a reader of its LIVE rows
+    (filtered through :meth:`CompactionLog.live_run_filter`)."""
+
+    path: str
+    parts: tuple[str, ...]
+    read: Callable[[], DataFrame]
+
+    @property
+    def nested(self) -> bool:
+        return len(self.parts) > 1
+
+
+def compact_run_tables(
+    clog: "CompactionLog",
+    tag: str,
+    where: str,
+    tables: "list[RunTable]",
+    may_fold: Callable[[str], bool],
+    registry: "tuple[str, str] | None" = None,
+) -> dict:
+    """The compaction protocol (steps 0-4 in the module docstring) over
+    an artifact's run-partitioned ``tables``. Every live run except
+    ``tag`` for which ``may_fold(run)`` holds is folded into
+    ``run=<tag>``; the others are reported as ``skipped_in_flight``.
+    ``registry`` is ``(path, id_col)``: the folded ORIGINAL runs'
+    ``(run, id_col)`` rows are frozen there (partitioned by run) before
+    the consolidated write. Returns the compaction summary dict."""
+    validate_compact_tag(tag, where)
+
+    def dirs() -> int:
+        return sum(count_run_partitions(t.path, t.nested) for t in tables)
+
+    dirs_before = dirs()
+    committed = clog.committed()
+    swept = sum(  # step 0
+        delete_folded_partitions(
+            t.path, {r for fl in committed.values() for r in fl}, nested=t.nested
+        )
+        for t in tables
+    )
+    folded: set[str] = set()
+    in_flight: set[str] = set()
+    for t in tables:
+        live = t.read().localCheckpoint(eager=True)
+        runs_now = {
+            str(r["run"])
+            for r in live.select("run").distinct().collect()  # O(runs)
+        }
+        fold = {r for r in runs_now if r != tag and may_fold(r)}
+        in_flight |= runs_now - fold - {tag}
+        originals = sorted(r for r in fold if not is_compact_tag(r))
+        if registry is not None and originals:  # step 1
+            reg_path, id_col = registry
+            _overwrite_partitions(
+                live.filter(F.col("run").isin(originals))
+                .select("run", id_col)
+                .distinct(),
+                ["run"],
+                reg_path,
+            )
+        if fold:  # step 2 (a committed tag's own rows are re-written too)
+            _overwrite_partitions(
+                live.filter(F.col("run").isin(sorted(fold | {tag})))
+                .withColumn("run", F.lit(tag)),
+                t.parts,
+                t.path,
+            )
+        live.unpersist()
+        folded |= fold
+    if folded:
+        # step 3 — COMMIT: the marker carries the folded runs PLUS the
+        # folded sets of superseded tags (and of this tag, if it is
+        # being re-committed), so dropping their markers cannot
+        # resurrect rows a lingering dir still holds
+        folded_all = set(folded)
+        for t in folded | {tag}:
+            folded_all |= set(committed.get(t, []))
+        clog.commit(tag, sorted(folded_all))
+        for t in tables:  # step 4 — reclaim listings
+            delete_folded_partitions(t.path, folded_all, nested=t.nested)
+        for t in folded & committed.keys():
+            clog.drop_marker(t)
     return {
-        d[len("run="):]
-        for parent in parents
-        for d in fs.listdir(parent)
-        if d.startswith("run=") and fs.isdir(os.path.join(parent, d))
+        "tag": tag,
+        "folded_runs": sorted(folded),
+        "skipped_in_flight": sorted(in_flight),
+        "swept_dirs": swept,
+        "partition_dirs_before": dirs_before,
+        "partition_dirs_after": dirs(),
+        "replay": not folded and tag in committed,
     }
+
+
+def retract_partitions(
+    path: str,
+    read: Callable[[], DataFrame],
+    parts,
+    id_col: str,
+    rm: DataFrame,
+) -> list[tuple]:
+    """Retract the rows whose ``id_col`` is in ``rm`` from the table at
+    ``path`` partitioned by ``parts``, rewriting only the partitions
+    that hold them (protocol: module docstring). ``read`` returns the
+    table's rows; ``rm`` is a materialized one-column id set. Returns
+    the touched partition keys (tuples of partition values), sorted."""
+    parts = list(parts)
+    tbl = read()
+    hit = (
+        tbl.join(F.broadcast(rm), id_col, "left_semi")
+        .groupBy(*parts)
+        .agg(F.count(F.lit(1)).alias("n_rm"))
+    )
+    sizes = tbl.groupBy(*parts).agg(F.count(F.lit(1)).alias("n")).join(hit, parts)
+    touched = {
+        tuple(r[c] for c in parts): (r["n"], r["n_rm"])
+        for r in sizes.toLocalIterator()  # O(touched partitions)
+    }
+    fs = statefs_for(path, rm.sparkSession)
+    for key in sorted(k for k, (n, n_rm) in touched.items() if n == n_rm):
+        rel = os.path.join(*(f"{c}={v}" for c, v in zip(parts, key)))
+        if not fs.isdir(os.path.join(path, rel)):
+            # its rows were just read, so the directory exists — unless
+            # a value needs partition-name escaping (written before run
+            # ids were validated). Skipping would leave the retracted
+            # rows on disk while reporting success.
+            raise ValueError(
+                f"retract_partitions: partition {rel!r} of {path!r} holds "
+                "rows but is not at its literal directory path (a value "
+                "that needs partition-name escaping) — rebuild the "
+                "artifact, then retry"
+            )
+        fs.rmtree(os.path.join(path, rel))
+    partial = [k for k, (n, n_rm) in touched.items() if n > n_rm]
+    if partial:
+        key = F.concat_ws("§", *parts)
+        remaining = (
+            read()
+            .filter(key.isin(sorted("§".join(map(str, k)) for k in partial)))
+            .join(F.broadcast(rm), id_col, "left_anti")
+            .localCheckpoint(eager=True)  # reads the files it replaces
+        )
+        _overwrite_partitions(remaining, parts, path)
+    return sorted(touched)
 
 
 def maybe_autocompact(artifact, run_id: str, max_live_runs) -> "dict | None":
@@ -322,3 +491,121 @@ def maybe_autocompact(artifact, run_id: str, max_live_runs) -> "dict | None":
             "requires unique per-epoch run ids"
         )
     return artifact.compact(tag)
+
+
+class RunPartitionedArtifact:
+    """Shared surface of the run-partitioned artifacts: the ``meta/``
+    commit marker (written LAST by every build, so a crashed build
+    reads as absent), the layout-version refusal, the compaction log
+    and the live-run count. Subclasses set ``FORMAT_VERSION`` and
+    implement :meth:`_run_tables`."""
+
+    META = "meta"
+    FORMAT_VERSION: int
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark = spark
+        self.path = path
+        self._meta_path = os.path.join(path, self.META)
+        self._clog = CompactionLog(spark, path)
+        self.fs = self._clog.fs  # StateFS (r11): shared per-path dispatch
+        self._meta: dict | None = None
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str):
+        return cls(spark, path)
+
+    def _run_tables(self) -> "list[RunTable]":
+        raise NotImplementedError
+
+    def exists(self) -> bool:
+        return self.fs.exists(self._meta_path)
+
+    @property
+    def meta(self) -> dict:
+        if self._meta is None:
+            self._meta = self.spark.read.parquet(self._meta_path).first().asDict()
+        return self._meta
+
+    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
+        """Schema-explicit read; a missing or file-less dir (fresh
+        build, or a crashed first write) is zero rows, never a
+        schema-inference failure."""
+        if not self.fs.exists(path):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(path)
+
+    def _read_live(self, path: str, schema: str) -> DataFrame:
+        """The LIVE rows of a run-partitioned table: rows folded by a
+        committed compaction and rows under an uncommitted compaction
+        tag are dropped, so reads stay exact through every crash
+        window of :func:`compact_run_tables`."""
+        return self._read_or_empty(path, schema).filter(
+            self._clog.live_run_filter("run")
+        )
+
+    def _write_meta(self, values: tuple, schema: str) -> None:
+        """Commit the build: the meta row lands last."""
+        self.spark.createDataFrame([values], schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(self._meta_path)
+
+    def layout_version(self) -> int | None:
+        """On-disk artifact format version; ``None`` when the artifact
+        is absent. A meta without ``format_version`` was written by the
+        first layout (v1). Lets cache owners implement
+        rebuild-on-older-layout (``build()`` is the upgrade path for
+        older versions; newer ones must be left alone)."""
+        if not self.exists():
+            return None
+        return int(self.meta.get("format_version") or 1)
+
+    def _check_version(self) -> None:
+        """Refuse to touch an artifact whose on-disk layout this code
+        does not speak — in EITHER direction. Older: its columns may be
+        missing and read back NULL — rebuild with ``build()`` to
+        upgrade. Newer: written by later code; reading it under this
+        layout could silently misread changed columns — upgrade the
+        engine instead (do NOT rebuild, that would destroy it). An
+        absent artifact has nothing on disk to misread."""
+        ver = self.layout_version()
+        if ver is None or ver == self.FORMAT_VERSION:
+            return
+        direction = (
+            "rebuild the index with build() to upgrade it"
+            if ver < self.FORMAT_VERSION
+            else "upgrade this engine; rebuilding would destroy the newer index"
+        )
+        raise ValueError(
+            f"{type(self).__name__} at {self.path!r} has artifact format "
+            f"v{ver}; this code speaks v{self.FORMAT_VERSION} — {direction}"
+        )
+
+    def _clear(self, *paths: str) -> None:
+        """Remove an existing artifact before a rebuild: meta first, so
+        a crash mid-clear or mid-rebuild reads as ABSENT, never as half
+        rebuilt; then ``paths`` and the compaction log. Refuses to
+        destroy an artifact written by NEWER code — rebuilding is the
+        upgrade path for OLDER layouts only."""
+        ver = self.layout_version()
+        if ver is not None and ver > self.FORMAT_VERSION:
+            raise ValueError(
+                f"{type(self).__name__} at {self.path!r} has artifact "
+                f"format v{ver}, newer than this code's "
+                f"v{self.FORMAT_VERSION} — refusing to rebuild over it; "
+                "upgrade the engine"
+            )
+        for p in (self._meta_path, *paths, self._clog.path):
+            self.fs.rmtree(p)
+        self._meta = None
+
+    def live_run_count(self) -> int:
+        """Number of LIVE ``run=`` partition names on disk across the
+        run-partitioned tables (distinct names minus committed-folded
+        ones) — the per-probe file-listing load the
+        :func:`maybe_autocompact` policy thresholds. StateFS listings
+        only, no Spark job."""
+        names = set().union(
+            *(distinct_run_names(t.path, t.nested) for t in self._run_tables())
+        )
+        return len(names - self._clog.folded())
