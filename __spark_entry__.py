@@ -2510,19 +2510,17 @@ def _neardup_label_index(spark: SparkSession, sf_dir: str):
 
     # FORMAT_VERSION in the tag: a layout bump changes the cache path,
     # so the stale-format index is simply never loaded (labels() would
-    # refuse it) and a fresh one is built under the new tag. The corpus
-    # fingerprint makes regenerated data at the same path a cache miss.
-    path = _artifact_cache_dir("labels", sf_dir, f"t0.5|n3|v{FORMAT_VERSION}")
-    idx = NearDupLabels.load(spark, path)
-    ver = idx.layout_version()
-    if ver is None or ver < FORMAT_VERSION:
-        # absent, or an OLDER on-disk layout (e.g. a cache built before
-        # the format existed): rebuild — build() is the documented
-        # upgrade path and clears the stale artifact. A NEWER layout is
-        # deliberately left alone (labels() raises upgrade-the-engine).
-        cat = _cat(spark, sf_dir)
-        idx = NearDupLabels.build(cat["documents"], path, threshold=0.5, n=3)
-    return idx
+    # refuse it) and a fresh one is built under the new tag. Absent or
+    # OLDER on-disk layouts are rebuilt; a NEWER layout is accepted and
+    # left alone (labels() raises upgrade-the-engine).
+    return _cached_artifact(
+        spark, "labels", sf_dir, f"t0.5|n3|v{FORMAT_VERSION}",
+        NearDupLabels.load,
+        lambda idx: NearDupLabels.build(
+            _cat(spark, sf_dir)["documents"], idx.path, threshold=0.5, n=3
+        ),
+        lambda idx: (idx.layout_version() or 0) >= FORMAT_VERSION,
+    )
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2823,6 +2821,19 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_certificate(approx, exact, k=5, mean_bound=0.5)
 
 
+def _ivf_index(spark: SparkSession, sf_dir: str):
+    """Build-or-load the persisted :class:`IvfIndex` (nc16, one k-means
+    iteration) that ``ann_ivf_index_topk`` probes."""
+    return _cached_artifact(
+        spark, "ivf", sf_dir, "nc16|it1", IvfIndex.load,
+        lambda idx: IvfIndex.build(
+            _cat(spark, sf_dir)["embeddings"], idx.path,
+            num_centroids=16, kmeans_iters=1,
+        ),
+        table="embeddings",
+    )
+
+
 def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 ANN via the *persisted* :class:`IvfIndex` — the amortized
     100 TB path (`ann_ivf_topk` re-runs k-means per call; this one
@@ -2838,14 +2849,9 @@ def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape stays pinned in pytest (tests/test_scale_ops.py,
     tests/test_plans.py) and raw lists remain on ``IvfIndex.query``.
     """
-    cat = _cat(spark, sf_dir)
-    emb = cat["embeddings"]
-    path = _artifact_cache_dir("ivf", sf_dir, "nc16|it1", "embeddings")
-    idx = IvfIndex.load(spark, path)
-    if not idx.exists():
-        idx = IvfIndex.build(emb, path, num_centroids=16, kmeans_iters=1)
+    emb = _cat(spark, sf_dir)["embeddings"]
     probes = emb.filter(F.col("vec_id") < 10)
-    approx = idx.query(probes, k=5, nprobe=4)
+    approx = _ivf_index(spark, sf_dir).query(probes, k=5, nprobe=4)
     exact = cosine_topk(probes, emb, k=5)
     return _ann_recall_certificate(approx, exact, k=5, mean_bound=0.4)
 
@@ -2895,26 +2901,24 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     append/remove/compact/replay semantics are untouched (whole-row
     operations; tests/test_compaction.py).
 
-    The index caches under the repo-local ``.ivfpq_cache/`` (the
-    ``.ivf_cache`` idiom, data-fingerprinted), so repeated bench runs
+    The index caches under the repo-local ``.ivfpq_cache/`` (see
+    :func:`_cached_artifact`, data-fingerprinted), so repeated bench runs
     measure the probe, not the build. SELF-CERTIFYING: recall vs the
     in-engine brute-force twin, measured 0.80/0.82/0.74 at
     sf0.001/0.01/0.1 for nc16/nprobe8/m16×256/rerank20, certified
     bound 0.65 — above raw full-scan PQ's floor while touching
     ~nprobe/nc of the corpus (recall-vs-nprobe sweep committed in
     docs/BENCH_NOTES.md)."""
-    from dataeng_azure_spotify_spark.operators.similarity import IvfIndex
+    emb = _cat(spark, sf_dir)["embeddings"]
 
-    cat = _cat(spark, sf_dir)
-    emb = cat["embeddings"]
-    path = _artifact_cache_dir(
-        "ivfpq", sf_dir, "nc16|it1|m16|nb8|pqit6", "embeddings"
-    )
-    idx = IvfIndex.load(spark, path)
-    if not idx.exists():
-        idx = IvfIndex.build(emb, path, num_centroids=16, kmeans_iters=1)
-    if not idx.has_codes():
+    def build(idx: IvfIndex) -> None:
+        IvfIndex.build(emb, idx.path, num_centroids=16, kmeans_iters=1)
         idx.add_codes(m=16, nbits=8, iters=6)
+
+    idx = _cached_artifact(
+        spark, "ivfpq", sf_dir, "nc16|it1|m16|nb8|pqit6", IvfIndex.load,
+        build, lambda idx: idx.exists() and idx.has_codes(), "embeddings",
+    )
     probes = emb.filter(F.col("vec_id") < 10)
     approx = idx.query_adc(probes, k=5, nprobe=8, rerank=20)
     exact = cosine_topk(probes, emb, k=5)
@@ -3325,24 +3329,46 @@ def _artifact_cache_dir(
     )
 
 
+def _cached_artifact(
+    spark: SparkSession, kind: str, sf_dir: str, params: str,
+    load: Callable, build: Callable,
+    complete: Callable = lambda art: art.exists(), table: str = "documents",
+):
+    """Build-or-load one fit-once driver artifact at
+    :func:`_artifact_cache_dir` ``(kind, sf_dir, params, table)``:
+    ``load(spark, path)`` opens the cache entry and ``complete(handle)``
+    probes it (default: its commit marker). An accepted entry is
+    returned untouched; a rejected one (absent, crashed or uncommitted,
+    stale layout) is cleared, then ``build(handle)`` fills a fresh
+    handle, which is returned. Repeated bench runs thus measure the
+    read path, not the fit."""
+    from dataeng_azure_spotify_spark.statefs import statefs_for
+
+    path = _artifact_cache_dir(kind, sf_dir, params, table)
+    art = load(spark, path)
+    if complete(art):
+        return art
+    statefs_for(path, spark).rmtree(path)
+    art = load(spark, path)
+    build(art)
+    return art
+
+
 def _bpe_tok(spark: SparkSession, sf_dir: str):
-    """Fit-once cached BpeTokenizer for the driver queries (the
-    ``.ivf_cache`` idiom: keyed by sf_dir + params + a corpus data
-    fingerprint — see _corpus_fingerprint — under a repo-local dir, so
-    repeated bench runs measure the merge-table read / tokenization,
-    not training — training economics are measured separately in
-    docs/BENCH_NOTES.md 'BPE trainer round economics')."""
+    """Fit-once cached BpeTokenizer for the driver queries (see
+    :func:`_cached_artifact`), so repeated bench runs measure the
+    merge-table read / tokenization, not training — training economics
+    are measured separately in docs/BENCH_NOTES.md 'BPE trainer round
+    economics'."""
     from dataeng_azure_spotify_spark.operators.bpe import BpeTokenizer
 
-    path = _artifact_cache_dir("bpe", sf_dir, f"nm{BPE_NUM_MERGES}|mpc2")
-    tok = BpeTokenizer(spark, path)
-    if not tok.exists():
-        cat = _cat(spark, sf_dir)
-        tok = BpeTokenizer.fit(
-            cat["documents"], path, num_merges=BPE_NUM_MERGES,
-            min_pair_count=2,
-        )
-    return tok
+    return _cached_artifact(
+        spark, "bpe", sf_dir, f"nm{BPE_NUM_MERGES}|mpc2", BpeTokenizer,
+        lambda tok: BpeTokenizer.fit(
+            _cat(spark, sf_dir)["documents"], tok.path,
+            num_merges=BPE_NUM_MERGES, min_pair_count=2,
+        ),
+    )
 
 
 def q_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3396,14 +3422,14 @@ def q_quality_nb_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         NbQualityModel,
     )
 
-    cat = _cat(spark, sf_dir)
-    path = _artifact_cache_dir("nb", sf_dir, "b4096")
-    model = NbQualityModel(spark, path)
-    if not model.exists():
-        model = NbQualityModel.fit(
-            cat["documents"], gopher_pass_col("text"), path, buckets=4096
-        )
-    return model.score(cat["documents"])
+    docs = _cat(spark, sf_dir)["documents"]
+    model = _cached_artifact(
+        spark, "nb", sf_dir, "b4096", NbQualityModel,
+        lambda m: NbQualityModel.fit(
+            docs, gopher_pass_col("text"), m.path, buckets=4096
+        ),
+    )
+    return model.score(docs)
 
 
 def q_remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3491,28 +3517,24 @@ UNIGRAM_PARAMS = dict(
 
 
 def _unigram_tok(spark: SparkSession, sf_dir: str):
-    """Fit-once cached UnigramTokenizer for the driver queries (the
-    ``.bpe_cache`` idiom: keyed by sf_dir + params + a corpus data
-    fingerprint — see _corpus_fingerprint — under a repo-local dir, so
-    repeated bench runs measure the piece-table read / tokenization,
-    not training — training economics are measured separately in
-    docs/BENCH_NOTES.md)."""
+    """Fit-once cached UnigramTokenizer for the driver queries (see
+    :func:`_cached_artifact`), so repeated bench runs measure the
+    piece-table read / tokenization, not training — training economics
+    are measured separately in docs/BENCH_NOTES.md."""
     from dataeng_azure_spotify_spark.operators.unigram import (
         UnigramTokenizer,
     )
 
     p = UNIGRAM_PARAMS
-    path = _artifact_cache_dir(
-        "unigram",
-        sf_dir,
+    return _cached_artifact(
+        spark, "unigram", sf_dir,
         f"t{p['n_iters']}|L{p['max_piece_len']}"
         f"|mc{p['min_count']}|mp{p['max_pieces']}",
+        UnigramTokenizer,
+        lambda tok: UnigramTokenizer.fit(
+            _cat(spark, sf_dir)["documents"], tok.path, **p
+        ),
     )
-    tok = UnigramTokenizer(spark, path)
-    if not tok.exists():
-        cat = _cat(spark, sf_dir)
-        tok = UnigramTokenizer.fit(cat["documents"], path, **p)
-    return tok
 
 
 def q_unigram_vocab_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5308,26 +5330,33 @@ def _cdf_orders_versions(cat: Catalog) -> "tuple[DataFrame, DataFrame]":
     return v0, v1
 
 
-def _cdf_orders_table(spark: SparkSession, sf_dir: str):
+def _cdf_cached_table(
+    spark: SparkSession, sf_dir: str, params: str, n: int, versions: Callable
+):
     """Fit-once cached ParquetSnapshotTable (cdf_keys=o_orderkey) with
-    the two versions committed — the ``.ivf_cache`` idiom (tag keyed by
-    sf_dir + a corpus data fingerprint) so repeated bench runs measure
-    the PULL (persisted-partial scan), not the table build; a partial
-    or stale build is detected by history length and rebuilt."""
-    from dataeng_azure_spotify_spark.statefs import statefs_for
+    the ``n`` DataFrames of ``versions(catalog)`` committed in order (see
+    :func:`_cached_artifact`), so repeated bench runs measure the PULL
+    (persisted-partial scan), not the table build; a partial or stale
+    build is detected by history length and rebuilt."""
     from dataeng_azure_spotify_spark.streaming.gold import (
         ParquetSnapshotTable,
     )
 
-    base = _artifact_cache_dir("cdf", sf_dir, "cdf-v1", "orders")
-    t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
-    if len(t.history()) != 2:
-        statefs_for(base, spark).rmtree(base)
-        t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
-        v0, v1 = _cdf_orders_versions(_cat(spark, sf_dir))
-        t.overwrite(v0)
-        t.overwrite(v1)
-    return t
+    def build(t: ParquetSnapshotTable) -> None:
+        for v in versions(_cat(spark, sf_dir)):
+            t.overwrite(v)
+
+    return _cached_artifact(
+        spark, "cdf", sf_dir, params,
+        lambda s, base: ParquetSnapshotTable(s, base, cdf_keys=["o_orderkey"]),
+        build, lambda t: len(t.history()) == n, "orders",
+    )
+
+
+def _cdf_orders_table(spark: SparkSession, sf_dir: str):
+    """The orders snapshot table with the two
+    :func:`_cdf_orders_versions` committed."""
+    return _cdf_cached_table(spark, sf_dir, "cdf-v1", 2, _cdf_orders_versions)
 
 
 def q_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5387,28 +5416,15 @@ def _cdf_schema_table(spark: SparkSession, sf_dir: str):
     ``o_orderpriority AS priority`` — a column-add overwrite, which
     persists the r12 full-rewrite change partial
     (streaming/gold.py _write_schema_change_partial)."""
-    from dataeng_azure_spotify_spark.statefs import statefs_for
-    from dataeng_azure_spotify_spark.streaming.gold import (
-        ParquetSnapshotTable,
-    )
 
-    base = _artifact_cache_dir("cdf", sf_dir, "cdfse-v1", "orders")
-    t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
-    if len(t.history()) != 3:
-        statefs_for(base, spark).rmtree(base)
-        t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
-        cat = _cat(spark, sf_dir)
+    def versions(cat):
         v0, v1 = _cdf_orders_versions(cat)
-        v2 = v1.join(
-            cat["orders"].select(
-                "o_orderkey", F.col("o_orderpriority").alias("priority")
-            ),
-            "o_orderkey",
+        prio = F.col("o_orderpriority").alias("priority")
+        return v0, v1, v1.join(
+            cat["orders"].select("o_orderkey", prio), "o_orderkey"
         )
-        t.overwrite(v0)
-        t.overwrite(v1)
-        t.overwrite(v2)
-    return t
+
+    return _cdf_cached_table(spark, sf_dir, "cdfse-v1", 3, versions)
 
 
 def q_change_feed_schema_evolution(
@@ -5478,41 +5494,37 @@ def _ivm_events_view(spark: SparkSession, sf_dir: str):
     — two insert runs splitting events by user parity, then a delete
     run retracting every user_id % 10 == 0 row — so the maintained
     view equals a from-scratch aggregate over the surviving rows."""
+    from dataeng_azure_spotify_spark.operators.artifact import committed
     from dataeng_azure_spotify_spark.operators.ivm import (
         MaterializedAggregate,
     )
     from dataeng_azure_spotify_spark.statefs import statefs_for
 
-    state = _artifact_cache_dir("ivm", sf_dir, "ivm-v1", "events")
-    view = MaterializedAggregate(
-        state, keys=["event_type"], sums={"value_sum": "value"}
-    )
-    fs = statefs_for(state, spark)
     want = {"run=ins-a", "run=ins-b", "run=del"}
-    have = (
-        {d for d in fs.listdir(state) if d.startswith("run=")}
-        if fs.isdir(state)
-        else set()
+
+    def complete(view: MaterializedAggregate) -> bool:
+        # exactly the three runs, each one's write committed
+        st, fs = view.state_dir, statefs_for(view.state_dir, spark)
+        have = fs.listdir(st) if fs.isdir(st) else []
+        return {d for d in have if d.startswith("run=")} == want and all(
+            committed(fs, os.path.join(st, d)) for d in want
+        )
+
+    def build(view: MaterializedAggregate) -> None:
+        cols = ("user_id", "event_type", "value")
+        ev, uid = _cat(spark, sf_dir)["events"].select(*cols), F.col("user_id")
+        view.apply_delta(ev.filter(uid % 2 == 0), run_id="ins-a")
+        view.apply_delta(ev.filter(uid % 2 == 1), run_id="ins-b")
+        dels = ev.filter(uid % 10 == 0).withColumn("__op", F.lit(-1))
+        view.apply_delta(dels, run_id="del", op_col="__op")
+
+    return _cached_artifact(
+        spark, "ivm", sf_dir, "ivm-v1",
+        lambda _s, state: MaterializedAggregate(
+            state, keys=["event_type"], sums={"value_sum": "value"}
+        ),
+        build, complete, "events",
     )
-    if have != want:
-        fs.rmtree(state)
-        ev = _cat(spark, sf_dir)["events"].select(
-            "user_id", "event_type", "value"
-        )
-        view.apply_delta(
-            ev.filter(F.col("user_id") % 2 == 0), run_id="ins-a"
-        )
-        view.apply_delta(
-            ev.filter(F.col("user_id") % 2 == 1), run_id="ins-b"
-        )
-        view.apply_delta(
-            ev.filter(F.col("user_id") % 10 == 0).withColumn(
-                "__op", F.lit(-1)
-            ),
-            run_id="del",
-            op_col="__op",
-        )
-    return view
 
 
 def q_ivm_events_view(spark: SparkSession, sf_dir: str) -> DataFrame:

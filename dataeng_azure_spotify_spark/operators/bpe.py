@@ -46,12 +46,11 @@ order.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.functions.text import tokens_col
+from dataeng_azure_spotify_spark.operators.artifact import FittedArtifact
 from dataeng_azure_spotify_spark.operators.similarity import (
     _require_integral_id,
 )
@@ -186,20 +185,12 @@ def bpe_train(
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 
-class BpeTokenizer:
-    """Persisted BPE vocabulary — fit-once / tokenize-many (the
-    DsirModel artifact pattern): ``merges/`` parquet plus ``meta/``
-    written LAST as the commit marker, so a crashed fit reads as
-    absent."""
+class BpeTokenizer(FittedArtifact):
+    """Persisted BPE vocabulary — fit-once / tokenize-many: ``merges/``
+    parquet plus the ``meta/`` commit marker (the fit-once artifact
+    protocol, :mod:`~.artifact`), so a crashed fit reads as absent."""
 
-    def __init__(self, spark, path: str):
-        from dataeng_azure_spotify_spark.statefs import statefs_for
-
-        self.spark = spark
-        self.path = path
-        self._merges_path = os.path.join(path, "merges")
-        self._meta_path = os.path.join(path, "meta")
-        self.fs = statefs_for(path, spark)  # StateFS (r11)
+    META_SCHEMA = "num_merges int, text_col string"
 
     @classmethod
     def fit(
@@ -210,44 +201,16 @@ class BpeTokenizer:
         text_col: str = "text",
         min_pair_count: int = 2,
     ) -> "BpeTokenizer":
-        spark = df.sparkSession
-        merges = bpe_train(
-            df,
-            num_merges=num_merges,
-            text_col=text_col,
-            min_pair_count=min_pair_count,
+        merges = bpe_train(df, num_merges, text_col, min_pair_count)
+        return cls._commit(
+            df.sparkSession, path, {"merges": merges.coalesce(1)},
+            (int(num_merges), text_col),
         )
-        tok = cls(spark, path)
-        tok.fs.rmtree(tok._meta_path)  # refit crash discipline
-        merges.coalesce(1).write.mode("overwrite").parquet(tok._merges_path)
-        spark.createDataFrame(
-            [(int(num_merges), text_col)], "num_merges int, text_col string"
-        ).coalesce(1).write.mode("overwrite").parquet(tok._meta_path)
-        return tok
-
-    @classmethod
-    def load(cls, spark, path: str) -> "BpeTokenizer":
-        tok = cls(spark, path)
-        if not tok.exists():
-            raise FileNotFoundError(f"no BpeTokenizer at {path!r}")
-        return tok
-
-    def exists(self) -> bool:
-        return self.fs.exists(self._meta_path)
 
     def merges(self) -> DataFrame:
         return self.spark.read.schema(MERGES_SCHEMA).parquet(
-            self._merges_path
+            self._table_path("merges")
         )
-
-    def _meta(self):
-        if getattr(self, "_meta_row", None) is None:
-            self._meta_row = (
-                self.spark.read.schema("num_merges int, text_col string")
-                .parquet(self._meta_path)
-                .first()
-            )
-        return self._meta_row
 
     def _merge_list(self) -> list[tuple[str, str]]:
         if getattr(self, "_ml", None) is None:

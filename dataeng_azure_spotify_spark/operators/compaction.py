@@ -79,6 +79,10 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataeng_azure_spotify_spark.operators.artifact import (
+    MetaCommittedArtifact,
+    committed,
+)
 from dataeng_azure_spotify_spark.statefs import statefs_for
 
 #: Reserved namespace for consolidated-partition tags. Admission
@@ -167,9 +171,7 @@ class CompactionLog:
         out: dict[str, list[str]] = {}
         for tag in self.fs.listdir(self.path):
             d = os.path.join(self.path, tag)
-            if not self.fs.isdir(d) or not self.fs.exists(
-                os.path.join(d, "_SUCCESS")
-            ):
+            if not self.fs.isdir(d) or not committed(self.fs, d):
                 continue  # uncommitted (crashed) marker — ignored
             folded: list[str] = []
             for fn in self.fs.listdir(d):
@@ -493,22 +495,18 @@ def maybe_autocompact(artifact, run_id: str, max_live_runs) -> "dict | None":
     return artifact.compact(tag)
 
 
-class RunPartitionedArtifact:
+class RunPartitionedArtifact(MetaCommittedArtifact):
     """Shared surface of the run-partitioned artifacts: the ``meta/``
-    commit marker (written LAST by every build, so a crashed build
-    reads as absent), the layout-version refusal, the compaction log
-    and the live-run count. Subclasses set ``FORMAT_VERSION`` and
-    implement :meth:`_run_tables`."""
+    commit marker (:mod:`~.artifact` — written LAST by every build, so
+    a crashed build reads as absent), the layout-version refusal, the
+    compaction log and the live-run count. Subclasses set
+    ``FORMAT_VERSION`` and implement :meth:`_run_tables`."""
 
-    META = "meta"
     FORMAT_VERSION: int
 
     def __init__(self, spark: SparkSession, path: str) -> None:
-        self.spark = spark
-        self.path = path
-        self._meta_path = os.path.join(path, self.META)
+        super().__init__(spark, path)
         self._clog = CompactionLog(spark, path)
-        self.fs = self._clog.fs  # StateFS (r11): shared per-path dispatch
         self._meta: dict | None = None
 
     @classmethod
@@ -518,13 +516,10 @@ class RunPartitionedArtifact:
     def _run_tables(self) -> "list[RunTable]":
         raise NotImplementedError
 
-    def exists(self) -> bool:
-        return self.fs.exists(self._meta_path)
-
     @property
     def meta(self) -> dict:
         if self._meta is None:
-            self._meta = self.spark.read.parquet(self._meta_path).first().asDict()
+            self._meta = self._read_meta().asDict()
         return self._meta
 
     def _read_or_empty(self, path: str, schema: str) -> DataFrame:
@@ -543,12 +538,6 @@ class RunPartitionedArtifact:
         return self._read_or_empty(path, schema).filter(
             self._clog.live_run_filter("run")
         )
-
-    def _write_meta(self, values: tuple, schema: str) -> None:
-        """Commit the build: the meta row lands last."""
-        self.spark.createDataFrame([values], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self._meta_path)
 
     def layout_version(self) -> int | None:
         """On-disk artifact format version; ``None`` when the artifact

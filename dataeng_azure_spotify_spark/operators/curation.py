@@ -25,7 +25,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,6 +38,7 @@ from dataeng_azure_spotify_spark.functions.text import (
     hash60,
     tokens_col,
 )
+from dataeng_azure_spotify_spark.operators.artifact import FittedArtifact
 
 #: Salt for the sampling hash — decouples the keep/drop decision from any
 #: other hash-derived decision (dedup buckets, shard assignment) made on
@@ -863,7 +863,7 @@ def _dsir_score_counts(
     )
 
 
-class DsirModel:
+class DsirModel(FittedArtifact):
     """Persisted DSIR importance model — the fit-once / score-many
     artifact form of :func:`dsir_select` (the IvfIndex / NearDupLabels
     pattern applied to data selection): at 100 TB nobody re-featurizes
@@ -871,9 +871,11 @@ class DsirModel:
     FIXED weights to stay deterministic across micro-batches.
 
     Layout under ``path``: ``weights/`` parquet (b, lrq — ≤ ``buckets``
-    rows) and ``meta/`` parquet (cq, buckets, id_col, text_col),
-    written LAST so a crashed fit reads as absent (the artifact crash
-    discipline shared with NearDupLabels).
+    rows) and the ``meta/`` commit marker (cq, buckets, id_col,
+    text_col) — the fit-once artifact protocol of :mod:`~.artifact`, so
+    a crashed fit or refit reads as absent and a handle pins meta and
+    weights together (one read per model instance; the streaming
+    admitter calls score() once per micro-batch).
 
     :meth:`score` applies the frozen weights to ANY corpus: buckets
     never seen when fitting carry lrq = 0 — which is the model's exact
@@ -883,14 +885,8 @@ class DsirModel:
     for :func:`...streaming.admission.run_admission_stream`.
     """
 
-    def __init__(self, spark, path: str):
-        from dataeng_azure_spotify_spark.statefs import statefs_for
-
-        self.spark = spark
-        self.path = path
-        self._weights_path = os.path.join(path, "weights")
-        self._meta_path = os.path.join(path, "meta")
-        self.fs = statefs_for(path, spark)  # StateFS (r11)
+    META_SCHEMA = "cq long, buckets int, id_col string, text_col string"
+    PINNED = {"weights": "b long, lrq long"}
 
     # -- lifecycle -------------------------------------------------------
     @classmethod
@@ -904,10 +900,8 @@ class DsirModel:
         buckets: int = 8192,
     ) -> "DsirModel":
         B = int(buckets)
-        spark = raw.sparkSession
         raw_c, tgt_b = _dsir_fit_tables(raw, target, id_col, text_col, B)
         w, cq_df = _dsir_weights(raw_c, tgt_b, B)
-        model = cls(spark, path)
         # fail BEFORE anything is written: a model fit on a featureless
         # corpus scores every document identically and is never what
         # the caller meant
@@ -918,61 +912,13 @@ class DsirModel:
                 "least one tokenful document — an empty side makes "
                 "every weight degenerate"
             )
-        cq = int(scal["cq"])
-        # refit crash discipline: meta is the COMMIT MARKER and must go
-        # first on a re-fit — otherwise a crash between the weights
-        # overwrite and the meta overwrite leaves OLD meta (e.g. a
-        # different bucket count) committed over NEW weights, a corrupt
-        # artifact that loads cleanly. Deleting meta up front makes any
-        # mid-refit crash read as absent, same as a crashed first fit.
-        model.fs.rmtree(model._meta_path)
-        w.write.mode("overwrite").parquet(model._weights_path)
-        spark.createDataFrame(
-            [(cq, B, id_col, text_col)],
-            "cq long, buckets int, id_col string, text_col string",
-        ).coalesce(1).write.mode("overwrite").parquet(model._meta_path)
-        return model
-
-    @classmethod
-    def load(cls, spark, path: str) -> "DsirModel":
-        model = cls(spark, path)
-        if not model.exists():
-            raise FileNotFoundError(f"no DsirModel at {path!r}")
-        return model
-
-    def exists(self) -> bool:
-        # meta is the commit marker (written last by fit)
-        return self.fs.exists(self._meta_path)
-
-    def _snapshot(self):
-        """(meta row, weights) loaded TOGETHER and memoized: the
-        weights are pinned with an eager localCheckpoint at the same
-        moment the meta row is read, so a handle always scores with a
-        consistent frozen model — a concurrent re-fit of the same path
-        can never pair this handle's cached meta (bucket count, cq)
-        with newer on-disk weights. One read per model instance; the
-        streaming admitter calls score() once per micro-batch."""
-        if getattr(self, "_snap", None) is None:
-            meta = (
-                self.spark.read.schema(
-                    "cq long, buckets int, id_col string, text_col string"
-                )
-                .parquet(self._meta_path)
-                .first()
-            )
-            w = (
-                self.spark.read.schema("b long, lrq long")
-                .parquet(self._weights_path)
-                .localCheckpoint(eager=True)
-            )
-            self._snap = (meta, w)
-        return self._snap
-
-    def _meta(self):
-        return self._snapshot()[0]
+        return cls._commit(
+            raw.sparkSession, path, {"weights": w},
+            (int(scal["cq"]), B, id_col, text_col),
+        )
 
     def weights(self) -> DataFrame:
-        return self._snapshot()[1]
+        return self._snapshot()[1]["weights"]
 
     # -- scoring ---------------------------------------------------------
     def score(self, df: DataFrame) -> DataFrame:

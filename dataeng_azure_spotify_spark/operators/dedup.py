@@ -141,16 +141,6 @@ def _spread(df: DataFrame, bytes_per_task: int = 0) -> DataFrame:
     return df.repartition(target)
 
 
-def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    # tokenize ONCE into a concrete column; build grams off the attribute
-    return (
-        _spread(df)
-        .select(F.col(id_col).alias("doc"), tokens_col(text_col).alias("__toks"))
-        .select("doc", shingles_col(F.col("__toks"), n).alias("shingles"))
-        .withColumn("n_sh", F.size("shingles"))
-    )
-
-
 def _prefix_len(threshold: float):
     """PPJoin prefix bound ``n_sh − ⌈t·n_sh⌉ + 1`` with the 1e-9 ceil
     backoff: float products like 0.07 × 100 = 7.000000000000001 would

@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dataeng_azure_spotify_spark.operators.artifact import committed
+
 #: multiplicity column carried in state partials
 _MULT = "__mult"
 
@@ -189,7 +191,7 @@ class MaterializedAggregate:
         ):
             if not (d.startswith(pref) and d[len(pref):].isdigit()):
                 continue
-            if fs.exists(os.path.join(self.state_dir, d, "_SUCCESS")):
+            if committed(fs, os.path.join(self.state_dir, d)):
                 out.add(int(d[len(pref):]))
         return out
 

@@ -36,19 +36,18 @@ rows — bounded by construction, never vocabulary-sized) and one
 grouped BIGINT sum. Nothing corpus-sized shuffles twice; in-corpus
 fit+score reuses the checkpointed feature table so the corpus is
 scanned once. The persisted :class:`NbQualityModel` is the
-fit-once / score-many artifact (the DsirModel pattern, same crash
-discipline), and :class:`NbQualityAdmitter` drops the frozen model
+fit-once / score-many artifact (the commit-marker protocol of
+:mod:`~.artifact`), and :class:`NbQualityAdmitter` drops the frozen model
 into the streaming admission framework.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.functions.mathx import portable_ln
+from dataeng_azure_spotify_spark.operators.artifact import FittedArtifact
 from dataeng_azure_spotify_spark.operators.curation import _dsir_bucket_counts
 
 
@@ -230,22 +229,18 @@ def nb_quality_train_score(
     )
 
 
-class NbQualityModel:
-    """Persisted NB quality model — fit-once / score-many (the
-    DsirModel artifact pattern, same layout and crash discipline):
-    ``weights/`` parquet (b, lrq — ≤ ``buckets`` rows) and ``meta/``
-    parquet (cq, prior_nano, buckets, id_col, text_col) written LAST
-    as the commit marker, so a crashed fit reads as absent and a
-    mid-refit crash can never pair old meta with new weights."""
+class NbQualityModel(FittedArtifact):
+    """Persisted NB quality model — fit-once / score-many (the fit-once
+    artifact protocol, :mod:`~.artifact`): ``weights/`` parquet (b, lrq
+    — ≤ ``buckets`` rows) and the ``meta/`` commit marker (cq,
+    prior_nano, buckets, id_col, text_col), so a crashed fit reads as
+    absent and a mid-refit crash can never pair old meta with new
+    weights. Meta and weights are pinned together per handle."""
 
-    def __init__(self, spark, path: str):
-        from dataeng_azure_spotify_spark.statefs import statefs_for
-
-        self.spark = spark
-        self.path = path
-        self._weights_path = os.path.join(path, "weights")
-        self._meta_path = os.path.join(path, "meta")
-        self.fs = statefs_for(path, spark)  # StateFS (r11)
+    META_SCHEMA = (
+        "cq long, prior_nano long, buckets int, id_col string, text_col string"
+    )
+    PINNED = {"weights": "b long, lrq long"}
 
     # -- lifecycle -------------------------------------------------------
     @classmethod
@@ -259,59 +254,17 @@ class NbQualityModel:
         buckets: int = 4096,
     ) -> "NbQualityModel":
         B = int(buckets)
-        spark = df.sparkSession
         _, w, consts = _nb_fit_tables(
             df, label, id_col, text_col, B, "NbQualityModel.fit"
         )
         row = consts.first()
-        model = cls(spark, path)
-        # refit crash discipline (DsirModel): delete the commit marker
-        # BEFORE touching weights so any mid-refit crash reads as absent
-        model.fs.rmtree(model._meta_path)
-        w.write.mode("overwrite").parquet(model._weights_path)
-        spark.createDataFrame(
-            [(int(row["cq"]), int(row["prior_nano"]), B, id_col, text_col)],
-            "cq long, prior_nano long, buckets int, "
-            "id_col string, text_col string",
-        ).coalesce(1).write.mode("overwrite").parquet(model._meta_path)
-        return model
-
-    @classmethod
-    def load(cls, spark, path: str) -> "NbQualityModel":
-        model = cls(spark, path)
-        if not model.exists():
-            raise FileNotFoundError(f"no NbQualityModel at {path!r}")
-        return model
-
-    def exists(self) -> bool:
-        return self.fs.exists(self._meta_path)
-
-    def _snapshot(self):
-        """Meta + weights loaded together and memoized (the DsirModel
-        consistency rationale: a concurrent re-fit can never pair this
-        handle's cached constants with newer on-disk weights)."""
-        if getattr(self, "_snap", None) is None:
-            meta = (
-                self.spark.read.schema(
-                    "cq long, prior_nano long, buckets int, "
-                    "id_col string, text_col string"
-                )
-                .parquet(self._meta_path)
-                .first()
-            )
-            w = (
-                self.spark.read.schema("b long, lrq long")
-                .parquet(self._weights_path)
-                .localCheckpoint(eager=True)
-            )
-            self._snap = (meta, w)
-        return self._snap
-
-    def _meta(self):
-        return self._snapshot()[0]
+        return cls._commit(
+            df.sparkSession, path, {"weights": w},
+            (int(row["cq"]), int(row["prior_nano"]), B, id_col, text_col),
+        )
 
     def weights(self) -> DataFrame:
-        return self._snapshot()[1]
+        return self._snapshot()[1]["weights"]
 
     # -- scoring ---------------------------------------------------------
     def score(self, df: DataFrame) -> DataFrame:

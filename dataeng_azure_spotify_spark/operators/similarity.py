@@ -37,6 +37,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .artifact import committed
 from .compaction import (
     RunPartitionedArtifact,
     RunTable,
@@ -1223,7 +1224,7 @@ class SemanticDedupIndex(RunPartitionedArtifact):
     locality, run-second so a replayed epoch's rewrite is an idempotent
     dynamic overwrite of its own partitions — and ``meta/`` (threshold,
     id/vec cols, format_version) written LAST so a crashed build reads
-    as absent (the DsirModel crash discipline).
+    as absent (the commit-marker protocol of :mod:`~.artifact`).
 
     **Equivalence contract** (pinned by
     ``test_incremental_semantic_equals_batch_on_union``): greedy leader
@@ -1694,7 +1695,7 @@ class IvfIndex:
         return cls(spark, path, id_col, vec_col)
 
     def exists(self) -> bool:
-        return self.fs.exists(self._centroids_path)
+        return committed(self.fs, self._centroids_path)
 
     def centroids(self) -> DataFrame:
         return self.spark.read.parquet(self._centroids_path)
@@ -1709,7 +1710,7 @@ class IvfIndex:
 
     # -- PQ codes leg (IVF-PQ / FAISS IVFADC) --------------------------
     def has_codes(self) -> bool:
-        return self.fs.exists(self._pq_codebook_path)
+        return committed(self.fs, self._pq_codebook_path)
 
     def pq_codebook(self) -> DataFrame:
         return self.spark.read.parquet(self._pq_codebook_path)
@@ -1756,9 +1757,9 @@ class IvfIndex:
             iters=iters,
             train_n=train_n,
         )
-        # codebook lands LAST: its existence is the has_codes() commit
-        # marker, so a crash mid-rewrite leaves a no-codes index that a
-        # retry rewrites again (the bucket rewrite is idempotent)
+        # codebook lands LAST: its committed write is the has_codes()
+        # commit marker, so a crash mid-rewrite leaves a no-codes index
+        # that a retry rewrites again (the bucket rewrite is idempotent)
         coded = self._with_codes(self.buckets(), self.centroids(), cb)
         (
             coded.write.mode("overwrite")

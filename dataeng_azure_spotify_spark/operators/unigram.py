@@ -54,12 +54,11 @@ position, so trained corpora never hit it).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.functions.mathx import portable_ln
+from dataeng_azure_spotify_spark.operators.artifact import FittedArtifact
 from dataeng_azure_spotify_spark.operators.bpe import _word_freq
 from dataeng_azure_spotify_spark.operators.similarity import (
     _require_integral_id,
@@ -301,20 +300,13 @@ def unigram_train(
         words.unpersist()
 
 
-class UnigramTokenizer:
-    """Persisted unigram-LM vocabulary — fit-once / tokenize-many (the
-    BpeTokenizer artifact pattern): ``pieces/`` parquet plus ``meta/``
-    written LAST as the commit marker, so a crashed fit reads as
+class UnigramTokenizer(FittedArtifact):
+    """Persisted unigram-LM vocabulary — fit-once / tokenize-many:
+    ``pieces/`` parquet plus the ``meta/`` commit marker (the fit-once
+    artifact protocol, :mod:`~.artifact`), so a crashed fit reads as
     absent."""
 
-    def __init__(self, spark, path: str):
-        from dataeng_azure_spotify_spark.statefs import statefs_for
-
-        self.spark = spark
-        self.path = path
-        self._pieces_path = os.path.join(path, "pieces")
-        self._meta_path = os.path.join(path, "meta")
-        self.fs = statefs_for(path, spark)  # StateFS (r11)
+    META_SCHEMA = "max_piece_len int, text_col string"
 
     @classmethod
     def fit(
@@ -327,49 +319,18 @@ class UnigramTokenizer:
         max_pieces: int = 200,
         text_col: str = "text",
     ) -> "UnigramTokenizer":
-        spark = df.sparkSession
         pieces = unigram_train(
-            df,
-            n_iters=n_iters,
-            max_piece_len=max_piece_len,
-            min_count=min_count,
-            max_pieces=max_pieces,
-            text_col=text_col,
+            df, n_iters, max_piece_len, min_count, max_pieces, text_col
         )
-        tok = cls(spark, path)
-        tok.fs.rmtree(tok._meta_path)  # refit crash discipline
-        pieces.coalesce(1).write.mode("overwrite").parquet(
-            tok._pieces_path
+        return cls._commit(
+            df.sparkSession, path, {"pieces": pieces.coalesce(1)},
+            (int(max_piece_len), text_col),
         )
-        spark.createDataFrame(
-            [(int(max_piece_len), text_col)],
-            "max_piece_len int, text_col string",
-        ).coalesce(1).write.mode("overwrite").parquet(tok._meta_path)
-        return tok
-
-    @classmethod
-    def load(cls, spark, path: str) -> "UnigramTokenizer":
-        tok = cls(spark, path)
-        if not tok.exists():
-            raise FileNotFoundError(f"no UnigramTokenizer at {path!r}")
-        return tok
-
-    def exists(self) -> bool:
-        return self.fs.exists(self._meta_path)
 
     def pieces(self) -> DataFrame:
         return self.spark.read.schema(PIECES_SCHEMA).parquet(
-            self._pieces_path
+            self._table_path("pieces")
         )
-
-    def _meta(self):
-        if getattr(self, "_meta_row", None) is None:
-            self._meta_row = (
-                self.spark.read.schema("max_piece_len int, text_col string")
-                .parquet(self._meta_path)
-                .first()
-            )
-        return self._meta_row
 
     def _score_map(self) -> dict:
         if getattr(self, "_sm", None) is None:

@@ -11,16 +11,13 @@ exactly the reference's behavior. For large extracts the read
 parallelizes with ``partitionColumn``/``numPartitions`` bounds so N
 executors each pull a key range; without it JDBC reads are single-stream.
 
-No database ships in this environment, so tests cover the option
-construction and query text; ``read()`` is exercised only when a real
-``url`` is reachable.
+Tests cover the option construction and query text; the options feed
+``spark.read.format("jdbc")`` against a reachable ``url``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -97,12 +94,3 @@ def reader_options(
         )
     return opts
 
-
-def read_incremental(
-    spark: SparkSession, src: JdbcTable, watermark: str, **kwargs
-) -> DataFrame:
-    """Build the extract DataFrame (lazy; touches the DB on action)."""
-    reader = spark.read.format("jdbc")
-    for k, v in reader_options(src, watermark, **kwargs).items():
-        reader = reader.option(k, v)
-    return reader.load()

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.delta_support import delta_available
+from dataeng_azure_spotify_spark.operators.artifact import committed
 from dataeng_azure_spotify_spark.operators.relational import expectations_drop
 from dataeng_azure_spotify_spark.operators.scd import apply_scd1, apply_scd2
 from dataeng_azure_spotify_spark.statefs import statefs_for
@@ -143,7 +144,7 @@ class ParquetSnapshotTable:
         exists — a half-written partial is invisible, and the pull
         falls back to snapshot-diff derivation for that version."""
         d = self._changes_dir(version)
-        if not self.fs.exists(os.path.join(d, "_SUCCESS")):
+        if not committed(self.fs, d):
             return None
         return self.spark.read.parquet(d)
 

@@ -220,25 +220,10 @@ def test_ann_ivf_index_probe_triggers_partition_pruning(spark):
     inspects the probe path itself, built from the same persisted
     index the declared query caches (the operator-level DPP pin in
     tests/test_llm_ops.py covers a fresh index)."""
-    import hashlib
-    import os as _os
-
-    from dataeng_azure_spotify_spark.operators.similarity import IvfIndex
     from pyspark.sql import functions as F
 
-    cat = entry._cat(spark, SF)
-    emb = cat["embeddings"]
-    params = (
-        f"{_os.path.abspath(SF)}|nc16|it1"
-        f"|data{entry._corpus_fingerprint(SF, 'embeddings')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = _os.path.join(
-        _os.path.dirname(_os.path.abspath(entry.__file__)), ".ivf_cache", tag
-    )
-    idx = IvfIndex.load(spark, path)
-    if not idx.exists():
-        idx = IvfIndex.build(emb, path, num_centroids=16, kmeans_iters=1)
+    emb = entry._cat(spark, SF)["embeddings"]
+    idx = entry._ivf_index(spark, SF)
     probes = emb.filter(F.col("vec_id") < 10)
     plan = _plan(idx.query(probes, k=5, nprobe=4))
     assert "dynamicpruning" in plan.lower()
